@@ -154,11 +154,14 @@ object Bench {
     val top = results.sortBy(-_._2).take(10)
       .map { case (k, v) => s"\"" + k + "\":" + fmt(v) }.mkString("{", ",", "}")
     // stop the session BEFORE printing: no Spark shutdown log line can
-    // land after (and displace) the JSON lines in the driver's tail
+    // land after (and displace) the JSON lines in the driver's tail; the
+    // lines print in `finally`, so a failing teardown cannot lose the run
     val wallAtStop = elapsed()
-    spark.stop()
-    println(fullLine)
-    // compact final line — MUST stay well under the driver's 2000-char tail
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$meta,"n_queries":${results.size},"wall_sec":${fmt(wallAtStop)},"queries_file":"$out","spread_file":"${out.stripSuffix(".json")}_spread.json","slowest10":$top}""")
+    try spark.stop()
+    finally {
+      println(fullLine)
+      // compact final line — MUST stay well under the driver's 2000-char tail
+      println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec",$meta,"n_queries":${results.size},"wall_sec":${fmt(wallAtStop)},"queries_file":"$out","spread_file":"${out.stripSuffix(".json")}_spread.json","slowest10":$top}""")
+    }
   }
 }

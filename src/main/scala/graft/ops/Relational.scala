@@ -586,6 +586,16 @@ object Relational {
       .crossJoin(gaps)
   }
 
+  /** q339's group key: the epoch day of `date` times 2 plus a hi bit, as
+    * one long. `dayOfKey` and `isHiKey` invert it for any day, pre-1970
+    * (negative) days included: floor division pairs with `pmod`, whereas
+    * `%` takes the dividend's sign.
+    */
+  private[graft] def dayClassKey(date: Column, hi: Column): Column =
+    (floor(unix_timestamp(date) / 86400L) * 2 + when(hi, 1L).otherwise(0L)).cast("long")
+  private[graft] def dayOfKey(key: Column): Column = floor(key / 2).cast("long")
+  private[graft] def isHiKey(key: Column): Column = pmod(key, lit(2L)) === 1
+
   /** q339: priority-inversion days — order days where URGENT/HIGH lines
     * actually shipped SLOWER (by exact median latency) than LOW-class
     * lines placed the same day: the SLA-integrity violation count behind
@@ -608,16 +618,15 @@ object Relational {
         col("l_orderkey") === col("o_orderkey"))
       .select(
         col("l_orderkey"),
-        (floor(unix_timestamp(col("o_orderdate")) / 86400L) * 2
-          + when(col("o_orderpriority").isin("1-URGENT", "2-HIGH"), 1L)
-            .otherwise(0L)).cast("long").as("grp"),
+        dayClassKey(col("o_orderdate"),
+          col("o_orderpriority").isin("1-URGENT", "2-HIGH")).as("grp"),
         datediff(col("l_shipdate"), col("o_orderdate"))
           .cast("double").as("lat")), col("l_orderkey"))
       .select(col("grp"), col("lat"))
     val med = Percentiles.exactQuantiles(lat, "grp", "lat", Seq("m" -> 0.5))
       .select(col("grp"), col("qv").as("med"))
-      .withColumn("d", floor(col("grp") / 2).cast("long"))
-      .withColumn("cls", when(col("grp") % 2 === 1, "hi").otherwise("lo"))
+      .withColumn("d", dayOfKey(col("grp")))
+      .withColumn("cls", when(isHiKey(col("grp")), "hi").otherwise("lo"))
     val hi = med.where(col("cls") === "hi").select(col("d"), col("med").as("mhi"))
     val lo = med.where(col("cls") === "lo").select(col("d"), col("med").as("mlo"))
     val joined = hi.join(lo, "d")

@@ -3,15 +3,19 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — small core count, UTC, AQE defaults. */
+/** Shared local session for specs — small core count, UTC, AQE defaults,
+  * and graft's streaming confs, so streaming specs run the shipped
+  * checkpoint path.
+  */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession
     .builder()
     .master("local[4]")
     .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    .config("spark.sql.extensions", "graft.GraftExtensions")
     .config("spark.sql.shuffle.partitions", "4")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config(GraftSession.streamingConf)
     .getOrCreate()
 }
